@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from ..config import ActivationRulesMode, Configuration
+from .checkpoints import hold
 from .range_join import workload_at_instants
 
 OUTCOME_ACTIVATE = 1
@@ -86,14 +87,15 @@ def features_table(log: DataFrame, config: Configuration) -> DataFrame:
     four plan branches below (instants, subset, flow, final join), and
     without materialization every branch re-runs the per-case windows
     over the discovery output (the q43 lesson; lazy, so plan building
-    stays execution-free and the blocks are ContextCleaner-reclaimed).
+    stays execution-free and the blocks are ContextCleaner-reclaimed, or
+    freed by release_analysis when ``log`` is an analyze_batches result).
     Modest at sf0.1 (the upstream discovery frame is already
     checkpointed, so each branch recompute was one window pass) but it
     bounds the fan-out cost at corpus scale, where four re-runs of the
     per-case aggregation are four shuffles.
     """
     ids = config.log_ids
-    cases = _per_case(log, config).localCheckpoint(eager=False)
+    cases = hold(log, _per_case(log, config).localCheckpoint(eager=False))
 
     inst = cases.groupBy(ids.batch_id).agg(
         F.first(ids.batch_type).alias(ids.batch_type),
@@ -108,6 +110,7 @@ def features_table(log: DataFrame, config: Configuration) -> DataFrame:
         F.col("_first.case_start").alias("inst_start"),
         "activities",
     ).localCheckpoint(eager=False)
+    hold(log, inst)
 
     # --- candidate instants -------------------------------------------------
     n_ready = config.num_batch_ready_negative_events

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .checkpoints import checkpoint_tracked, release_checkpoints
+from .checkpoints import data_barrier, release
 from .dedup import tokens
 
 END = "</w>"
@@ -117,7 +117,7 @@ def bpe_train(docs: DataFrame, num_merges: int = 32,
     Determinism: argmax ties break lexicographically on (a, b), so the
     merge list is a pure function of the corpus.
     """
-    words, ids = checkpoint_tracked(word_counts(docs, text_col))
+    words = data_barrier(word_counts(docs, text_col), eager=True)
     merges: list[tuple[str, str]] = []
     for _ in range(num_merges):
         best = (
@@ -130,13 +130,14 @@ def bpe_train(docs: DataFrame, num_merges: int = 32,
             break
         a, b = best[0]["a"], best[0]["b"]
         merges.append((a, b))
-        new, new_ids = checkpoint_tracked(
+        new = data_barrier(
             words.select(_merge_fold(F.col("syms"), a, b).alias("syms"),
-                         "wcount")
+                         "wcount"),
+            eager=True,
         )
         new.count()  # materialize before releasing the parent's blocks
-        release_checkpoints(new, ids)
-        words, ids = new, new_ids
+        release(words)
+        words = new
     return merges, words
 
 

@@ -1,35 +1,30 @@
-"""Tracked localCheckpoint: eager lineage truncation WITH release —
-plus the r12 barrier policy (VERDICT r11 task 8).
+"""Barriers (checkpointed frames) with exact, thread-safe release.
 
-``DataFrame.localCheckpoint(eager=True)`` persists the frame's rows in
-the block manager but exposes no handle to free them — every iterative
-or multi-stage pipeline that checkpoints per stage/superstep leaks one
-full copy of its frame per call for the session lifetime (the r2 judge
-flagged this in both ``discover_batches`` and ``connected_components``).
+``DataFrame.localCheckpoint`` persists rows in the block manager with no
+handle to free them; a pipeline that stages per step would leak one copy
+per step for the session lifetime.
 
-These helpers snapshot the persistent-RDD id set around the checkpoint
-call so intermediates can be unpersisted explicitly once a LATER
-checkpoint has materialized. A localCheckpointed RDD has no lineage to
-recompute from, so releasing one is safe ONLY when nothing will read it
-again — i.e. after every downstream consumer is itself checkpointed.
+Ownership rule: a barrier frame is the only source of its id. The frame
+returned by :func:`data_barrier` (or ``localCheckpoint``) is a scan of
+one RDD, ``logical().rdd()``, and :func:`release` frees exactly that
+RDD's blocks. Nothing diffs the session-global persistent-RDD set, so
+calls running concurrently in one session never see each other's
+blocks. A frame made on behalf of a result is registered with it
+(:func:`own` / :func:`hold`) and freed by :func:`release_held`.
 
-Driver-side bookkeeping only; single-threaded job submission assumed
-(concurrent checkpoint calls could interleave id snapshots).
+A local checkpoint has no lineage to recompute from: release a barrier
+ONLY when nothing will read it again, i.e. after every action on it and
+on everything derived from it, or once a later barrier has materialized.
 
-Barrier policy (SURVEY §6 policy table): local checkpoints store
-blocks on executors only and are NOT fault-tolerant — on any executor
-loss the job fails unrecoverably instead of recomputing. That is the
-right trade on the single-host bench topology (zero I/O to durable
-storage, and an executor loss kills local[N] anyway), and the wrong
-one on a cluster for DATA-SIZED staged frames (token tables, exploded
-(doc, gram) rows, full event frames), whose loss wastes the most work.
-``SPARK_GRAFT_CHECKPOINT=reliable`` swaps every barrier routed through
-:func:`data_barrier` / :func:`checkpoint_tracked` to a reliable
-``DataFrame.checkpoint()`` against ``SPARK_GRAFT_CHECKPOINT_DIR``
-(durable storage on a real cluster; defaults to a per-session temp dir
-so the mode is testable anywhere). Values are identical in both modes
-— only the storage medium and fault-tolerance change
-(tests/test_checkpoint_policy.py pins both).
+Barrier policy (SURVEY §6): local checkpoints keep blocks on executors
+only, so an executor loss fails the job instead of recomputing. That
+suits a single host; on a cluster, DATA-SIZED staged frames (token
+tables, exploded (doc, gram) rows, full event frames) should survive it.
+``SPARK_GRAFT_CHECKPOINT=reliable`` turns every :func:`data_barrier`
+into a reliable ``DataFrame.checkpoint()`` under
+``SPARK_GRAFT_CHECKPOINT_DIR`` (default: a per-session temp dir).
+Values are identical in both modes (tests/test_checkpoint_policy.py),
+and releasing a reliable barrier is a no-op.
 """
 
 from __future__ import annotations
@@ -41,6 +36,7 @@ from pyspark.sql import DataFrame
 
 _MODE_ENV = "SPARK_GRAFT_CHECKPOINT"
 _DIR_ENV = "SPARK_GRAFT_CHECKPOINT_DIR"
+_HELD = "_bpa_held"
 
 
 def _reliable_mode() -> bool:
@@ -56,39 +52,42 @@ def _ensure_checkpoint_dir(df: DataFrame) -> None:
 
 
 def data_barrier(df: DataFrame, eager: bool = False) -> DataFrame:
-    """Stage a DATA-SIZED frame (see the module docstring's policy):
-    ``localCheckpoint`` under the default local mode, reliable
-    ``checkpoint()`` under ``SPARK_GRAFT_CHECKPOINT=reliable``."""
+    """Stage a DATA-SIZED frame per the module docstring's policy.
+    ``eager=False`` defers materialization to the NEXT action on the
+    returned frame, fusing "materialize" and "compute" into one job."""
     if _reliable_mode():
         _ensure_checkpoint_dir(df)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
 
 
-def checkpoint_tracked(df: DataFrame, eager: bool = True) -> tuple[DataFrame, set[int]]:
-    """:func:`data_barrier` + the ids of the RDDs it newly persisted.
-    The returned frame's plan is a flat scan of its own blocks — it
-    never re-reads earlier checkpoints, so the caller may release those
-    once this one exists.
-
-    ``eager=False`` defers materialization to the caller's NEXT action
-    on the returned frame (the persist marker is registered
-    immediately, so id tracking still works) — use it when that action
-    is a cheap full-scan aggregate anyway, fusing "materialize" and
-    "compute" into one job instead of two."""
-    jsc = df.sparkSession.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
-    out = data_barrier(df, eager=eager)
-    after = set(jsc.getPersistentRDDs().keySet().toArray())
-    return out, after - before
+def release(*barriers: DataFrame) -> None:
+    """Drop the blocks behind each barrier frame (non-blocking). See the
+    module docstring for when this is safe."""
+    for b in barriers:
+        b._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
-def release_checkpoints(df: DataFrame, rdd_ids: set[int]) -> None:
-    """Drop the block-manager storage of previously localCheckpointed
-    intermediates (blocking=False). See module docstring for the safety
-    contract. No-op on ids a reliable checkpoint did not persist."""
-    jmap = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
-    for rid in rdd_ids:
-        rdd = jmap.get(rid)
-        if rdd is not None:
-            rdd.unpersist(False)
+def own(result: DataFrame, *barriers: DataFrame) -> DataFrame:
+    """Make ``result`` the owner of ``barriers`` and of every frame later
+    :func:`hold`-ed on its behalf; returns ``result``."""
+    setattr(result, _HELD, list(barriers))
+    return result
+
+
+def hold(owner: DataFrame, barrier: DataFrame) -> DataFrame:
+    """Add ``barrier`` (staged from ``owner``) to the held list that
+    ``owner`` shares with its :func:`own` result, if it has one; later
+    stagings of ``barrier`` join the same list. Returns ``barrier``."""
+    held = getattr(owner, _HELD, None)
+    if held is not None:
+        held.append(barrier)
+        setattr(barrier, _HELD, held)
+    return barrier
+
+
+def release_held(owner: DataFrame) -> None:
+    """Release every barrier held on ``owner``'s behalf; idempotent."""
+    held = getattr(owner, _HELD, None) or []
+    release(*held)
+    held.clear()

@@ -755,9 +755,7 @@ def source_overlap_sketch(docs: DataFrame, k: int = 64,
     # staging, each side would re-run the full-corpus explode+min. The
     # staged frame is |sources|·k rows (deferred materialization — the
     # next action computes it once).
-    from .checkpoints import checkpoint_tracked
-
-    sig, _ = checkpoint_tracked(sig, eager=False)
+    sig = data_barrier(sig)
     a = sig.select(F.col("source").alias("source_a"), "seed",
                    F.col("_mh").alias("_ma"))
     b = sig.select(F.col("source").alias("source_b"), "seed",

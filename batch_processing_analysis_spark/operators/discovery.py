@@ -67,14 +67,12 @@ chains).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..config import BatchType, Configuration, EventLogIDs
-from .checkpoints import checkpoint_tracked, data_barrier, release_checkpoints
+from .checkpoints import data_barrier, release
 
 RAW_SIMULTANEOUS = "simultaneous"
 RAW_SEQUENTIAL = "sequential"
@@ -164,15 +162,6 @@ def detect_task_batches(log: DataFrame, ids: EventLogIDs, gap_seconds: int = 0) 
         .drop("_cls", "_grp", "_res")
     )
 
-def _detect_barrier(df: DataFrame) -> DataFrame:
-    """Optional eager barrier on the case detectors' shared pre-envelope
-    frame (``SPARK_GRAFT_DETECT_BARRIER=1``; default off). See the call
-    sites for the overlap-vs-dedupe trade; discover_batches releases
-    the blocks once its mid1 checkpoint is materialized."""
-    if os.environ.get("SPARK_GRAFT_DETECT_BARRIER") == "1":
-        return data_barrier(df, eager=True)
-    return df
-
 
 def detect_case_batches(log: DataFrame, ids: EventLogIDs, gap_seconds: int = 0) -> DataFrame:
     """Case-level (subprocess) detection (W2): per-case maximal runs of
@@ -198,21 +187,6 @@ def detect_case_batches(log: DataFrame, ids: EventLogIDs, gap_seconds: int = 0) 
             (F.coalesce(F.lag("_res").over(w_case) != F.col("_res"), F.lit(True))).cast("long")
         ).over(w_run),
     )
-    # The envelope aggregation below AND the join-back both consume
-    # this frame, so the whole upstream (input scan, enablement
-    # window, task-detection windows, the _run window) executes once
-    # per join side — a KNOWN duplicated subtree. A lazy checkpoint
-    # cannot dedupe it (the envelope side reaches the join as a
-    # broadcast-exchange FUTURE that races the main lineage before
-    # blocks exist), so the cure is an EAGER barrier — which
-    # serializes upstream vs join stages and measured +0.4-0.9 s on
-    # the analyze facade at sf0.1, where the duplicate runs free on
-    # idle cores (interleaved same-session A/B, OPTIMIZATION_r12.md).
-    # Local default: overlap (barrier off). At cluster scale the
-    # envelope side outgrows the broadcast threshold, the overlap
-    # disappears, and the duplicate detection pass costs real serial
-    # time — turn the barrier on (guide §2.1 / §1.2).
-    df = _detect_barrier(df)
     env = (
         df.groupBy(ids.case, "_run")
         .agg(
@@ -318,9 +292,6 @@ def detect_case_batches_all(log: DataFrame, ids: EventLogIDs,
         ids.start_time, ids.end_time, ids.activity
     )
     df = df.withColumn("_rn", F.row_number().over(w_in_run))
-    # Same barrier decision as detect_case_batches: `runs` and the
-    # winner join-back both consume this frame.
-    df = _detect_barrier(df)
 
     runs = (
         df.groupBy(ids.case, "_run")
@@ -702,8 +673,6 @@ def discover_batches(log: DataFrame, config: Configuration,
         # what detection saw, mirroring the reference end-to-end.
         for c in (ids.start_time, ids.end_time, ids.enabled_time):
             log = log.withColumn(c, F.date_trunc("second", F.col(c)))
-    jsc = log.sparkSession.sparkContext._jsc
-    det_before = set(jsc.getPersistentRDDs().keySet().toArray())
     df = detect_task_batches(log, ids, config.gap_seconds)
     if detect_case_level and config.subsequence_mode in ("all", "mined"):
         df = detect_case_batches_all(
@@ -719,10 +688,6 @@ def discover_batches(log: DataFrame, config: Configuration,
         df = df.withColumn("_sub_grp", F.lit(None).cast("string")).withColumn(
             "_sub_type", F.lit(None).cast("string")
         )
-    # The case detectors lazily checkpoint their shared pre-envelope
-    # frame (one execution for both join sides); once mid1 below is
-    # materialized (eagerly) nothing reads that intermediate again.
-    det_ids = set(jsc.getPersistentRDDs().keySet().toArray()) - det_before
     # Every repair pass below joins the frame against aggregates derived
     # FROM that same frame (a lineage diamond), and downstream consumers
     # (WT decomposition, reporting) fork it several more times. Plain
@@ -733,16 +698,15 @@ def discover_batches(log: DataFrame, config: Configuration,
     # flat cached scan. On a real cluster, swap for checkpoint() to
     # durable storage if fault-tolerance across the discovery boundary
     # matters; the plan-truncation effect is the same.
-    df, mid1 = checkpoint_tracked(df)
-    release_checkpoints(df, det_ids)  # mid1 is eager; the detect stage is dead
-    df = _split_mixed_type_subprocess(df)
+    mid1 = data_barrier(df, eager=True)
+    df = _split_mixed_type_subprocess(mid1)
     # Resource split (discovery.py:84-114) is a no-op here: both detectors
     # already partition by resource, so an instance can never span two.
     df = _split_wrong_enabled_both(df, ids)
     # Same reasoning: min-size (2 forks) + unify (2 forks + a count
     # action) all branch off the post-split frame.
-    df, mid2 = checkpoint_tracked(df)
-    df = _min_size_filter(df, ids, config.min_batch_instance_size)
+    mid2 = data_barrier(df, eager=True)
+    df = _min_size_filter(mid2, ids, config.min_batch_instance_size)
     # Consumers (features table, WT decomposition, reporting) fork the
     # returned frame up to 5 ways; without truncation each fork re-runs
     # min-size + unify (agg + join-back) from the checkpoint above.
@@ -751,5 +715,5 @@ def discover_batches(log: DataFrame, config: Configuration,
     out = data_barrier(_unify(df, ids), eager=True)
     # The two intermediates above exist only to serve THIS pipeline;
     # once `out` is materialized nothing can reference them again.
-    release_checkpoints(out, mid1 | mid2)
+    release(mid1, mid2)
     return out

@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpoints import checkpoint_tracked, release_checkpoints
+from .checkpoints import data_barrier, release
 
 
 def connected_components(
@@ -57,12 +57,13 @@ def connected_components(
     Deterministic: the fixpoint of min-propagation is unique, so the
     result is independent of partitioning and iteration interleaving.
     """
-    sym, sym_ids = checkpoint_tracked(
+    sym = data_barrier(
         edges.select(F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst"))
         .unionByName(
             edges.select(F.col(dst_col).alias("_src"), F.col(src_col).alias("_dst"))
         )
-        .distinct()
+        .distinct(),
+        eager=True,
     )
     # Supersteps only carry nodes that touch an edge: near-dup graphs
     # are sparse (most of the corpus is isolated), so iterating over the
@@ -71,11 +72,12 @@ def connected_components(
     # Init folds the first propagation in for free: label(v) =
     # min(v, neighbors(v)) is one groupBy on the edge table — the same
     # shuffle a bare self-label init plus one round would have cost.
-    labels, label_ids = checkpoint_tracked(
+    labels = data_barrier(
         sym.groupBy("_src")
         .agg(F.min("_dst").alias("_mn"))
         .select(F.col("_src").alias("_id"),
-                F.least("_src", "_mn").alias("_comp"))
+                F.least("_src", "_mn").alias("_comp")),
+        eager=True,
     )
     # Labels are non-increasing under both steps, so the label SUM is a
     # strictly decreasing progress measure: fixpoint ⟺ sum unchanged.
@@ -100,24 +102,23 @@ def connected_components(
         # Lazy checkpoint + the convergence aggregate as the action:
         # materialization and the label-sum scan fuse into ONE job per
         # superstep (eager + separate agg ran two).
-        new, new_ids = checkpoint_tracked(
+        new = data_barrier(
             new.join(jump, new["_comp"] == jump["_jid"], "left")
-            .select("_id", F.coalesce("_jcomp", "_comp").alias("_comp")),
-            eager=False,
+            .select("_id", F.coalesce("_jcomp", "_comp").alias("_comp"))
         )
         new_sum = new.agg(F.sum("_comp")).first()[0]
         # The new frame is materialized and lineage-free; the previous
         # superstep's label blocks can never be read again (r2 advice:
         # without this a K-round fixpoint retains K label-table copies).
-        release_checkpoints(new, label_ids)
-        labels, label_ids = new, new_ids
+        release(labels)
+        labels = new
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
 
     # The returned plan reads only the FINAL label table; the edge
     # table served the loop alone and its blocks can go now.
-    release_checkpoints(labels, sym_ids)
+    release(sym)
     return (
         nodes.select(F.col(id_col)).distinct()
         .join(labels.withColumnRenamed("_id", id_col), id_col, "left")
@@ -222,20 +223,20 @@ def pagerank(
         sym_nodes = sym_nodes.unionByName(
             nodes.select(F.col(id_col).alias("_id"))
         )
-    node_ids, node_ck = checkpoint_tracked(sym_nodes.distinct())
+    node_ids = data_barrier(sym_nodes.distinct(), eager=True)
 
     deg = edges.groupBy(F.col(src_col).alias("_src")).agg(
         F.count(F.lit(1)).alias("_deg")
     )
-    ed, ed_ck = checkpoint_tracked(
+    ed = data_barrier(
         edges.select(F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst"))
-        .join(deg, "_src")
+        .join(deg, "_src"),
+        eager=True,
     )
 
     base = F.lit((100 - damping_pct) * 10_000).cast("long")
     ranks = node_ids.select("_id", F.lit(1_000_000).cast("long").alias("_r"))
-    rank_ck: set[int] = set()
-    for _ in range(n_iterations):
+    for i in range(n_iterations):
         contrib = (
             ed.join(ranks, ed["_src"] == ranks["_id"])
             .select(
@@ -251,11 +252,12 @@ def pagerank(
             .select("_id",
                     (base + F.coalesce("_in", F.lit(0))).alias("_r"))
         )
-        new, new_ck = checkpoint_tracked(new)
-        release_checkpoints(new, rank_ck)
-        ranks, rank_ck = new, new_ck
+        new = data_barrier(new, eager=True)
+        if i:  # round 0 read the unstaged seed ranks
+            release(ranks)
+        ranks = new
 
-    release_checkpoints(ranks, node_ck | ed_ck)
+    release(node_ids, ed)
     return ranks.select(F.col("_id").alias(id_col),
                         F.col("_r").alias("rank_micros"))
 

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from .checkpoints import data_barrier
 from .dedup import hash60
 
 
@@ -104,9 +105,7 @@ def temperature_mix_weights(docs: DataFrame, alpha: float = 0.3,
     # ``per`` is referenced by the total, the scores, and the
     # normalizer — unstaged, each reference re-scans the corpus. The
     # staged frame is |sources| rows.
-    from .checkpoints import checkpoint_tracked
-
-    per, _ = checkpoint_tracked(per, eager=False)
+    per = data_barrier(per)
     tot = per.agg(F.sum("n_size").alias("_tot"))
     scored = per.join(F.broadcast(tot)).select(
         "source", "n_size",

@@ -50,6 +50,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
+from .checkpoints import data_barrier
+
 # SRP quantization scale: components/weights become floor(x·Q + 0.5) as
 # int64, making hyperplane dot products exact integer sums (see
 # srp_signatures). 2^20 keeps |dot| < 2^53 even for |x| ≤ 100, dim 64.
@@ -1045,9 +1047,7 @@ def embedding_outliers(corpus: DataFrame, k: int = 20,
     # unstaged, each reference re-runs the explode/centroid/distance
     # pipeline. The staged frame is one row per vector (id, label,
     # dist_micro).
-    from .checkpoints import checkpoint_tracked
-
-    d2, _ = checkpoint_tracked(d2, eager=False)
+    d2 = data_barrier(d2)
     mom = d2.groupBy(label_col).agg(
         F.count(F.lit(1)).alias("_gn"),
         F.sum("dist_micro").alias("_gs"),

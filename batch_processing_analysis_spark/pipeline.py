@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from .config import Configuration
-from .operators.checkpoints import data_barrier
+from .operators.checkpoints import data_barrier, own, release_held
 from .operators.discovery import discover_batches
 from .operators.enablement import add_enabled_times
 from .operators.reporting import batch_report, render_report
@@ -25,41 +25,38 @@ def analyze_batches(log: DataFrame, config: Configuration | None = None,
     table of the reference, outputs/*_WTs.csv.gz).
 
     The result is backed by the discovery pipeline's eager
-    localCheckpoint; when a long-lived session is DONE with the frame,
-    pass it to :func:`release_analysis` — repeated facade invocations
-    otherwise each retain one checkpointed copy of the log until driver
-    GC gets around to it (measured 2.7× slowdown on the second of two
+    localCheckpoint, and :func:`batch_report` / ``features_table``
+    called on it register their staged frames with it. When a
+    long-lived session is DONE with the frame, pass it to
+    :func:`release_analysis` — repeated facade invocations otherwise
+    each retain one checkpointed copy of the log until driver GC gets
+    around to it (measured 2.7× slowdown on the second of two
     back-to-back 1M-event runs)."""
     config = config or Configuration()
     ids = config.log_ids
-    jsc = log.sparkSession.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
     if ids.enabled_time not in log.columns:
         log = add_enabled_times(log, ids)
     batched = discover_batches(log, config, detect_case_level=detect_case_level)
-    out = add_waiting_times(batched, config)
-    after = set(jsc.getPersistentRDDs().keySet().toArray())
-    out._bpa_checkpoint_ids = after - before
-    return out
+    return own(add_waiting_times(batched, config), batched)
 
 
 def release_analysis(df: DataFrame) -> None:
     """Free the block-manager storage behind an :func:`analyze_batches`
-    result. Call ONLY once every action on the frame (and anything
-    derived from it) has run — localCheckpointed blocks have no lineage
-    to recompute from. No-op for frames without a release handle."""
-    from .operators.checkpoints import release_checkpoints
-
-    ids = getattr(df, "_bpa_checkpoint_ids", None)
-    if ids:
-        release_checkpoints(df, ids)
+    result: its discovery checkpoint and the report and features blocks
+    staged on its behalf. Call ONLY once every action on the frame (and
+    anything derived from it) has run — localCheckpointed blocks have no
+    lineage to recompute from. Idempotent; a no-op for frames that
+    :func:`analyze_batches` did not return."""
+    release_held(df)
 
 
 def waiting_time_report(log: DataFrame, config: Configuration | None = None) -> str:
     """Event log -> rendered text report (reference: main.py:23-25)."""
     config = config or Configuration()
     analyzed = analyze_batches(log, config)
-    return render_report(batch_report(analyzed, config).collect(), config)
+    rows = batch_report(analyzed, config).collect()
+    release_analysis(analyzed)
+    return render_report(rows, config)
 
 
 def corpus_feature_stage(docs: DataFrame) -> DataFrame:

@@ -17,12 +17,14 @@ from pyspark.sql import Window as W
 
 from ..config import ActivationRulesMode, Configuration, EventLogIDs
 from ..operators.activation_rules import features_table, get_activation_rules
+from ..operators.checkpoints import data_barrier
 from ..operators.enablement import add_enabled_times, directly_follows_matrix
 from ..operators.discovery import detect_task_batches, discover_batches
 from ..operators.reporting import batch_report
 from ..operators.waiting_time import add_waiting_times
 from ..sources.event_log import events_as_event_log
 from .registry import query
+from .session_cache import SessionCache
 
 IDS = EventLogIDs()
 
@@ -471,27 +473,23 @@ WT_SQL = """
 # session. Without this, a bench/verify session runs the whole pipeline
 # (enablement + two detector window stacks + repairs) once PER QUERY and
 # holds each run's checkpoint blocks concurrently.
-_DISC_CACHE: dict[tuple[str, str, bool], tuple[DataFrame, Configuration]] = {}
+_DISC_CACHE = SessionCache()
 
 # q28's displaced-log enabled frame (semantically distinct from the
 # _DISC_CACHE pipeline): one deferred localCheckpoint per
 # (applicationId, sf_dir), shared across invocations.
-_Q28_CACHE: dict[tuple[str, str], DataFrame] = {}
+_Q28_CACHE = SessionCache()
 
 
 def _discovered(spark: SparkSession, sf_dir: str, checkpoints: bool = False):
-    key = (spark.sparkContext.applicationId, sf_dir, checkpoints)
-    if key not in _DISC_CACHE:
+    def build():
         cfg = Configuration(report_batch_checkpoints=checkpoints)
         log = add_enabled_times(
             _event_log(spark, sf_dir), IDS, concurrency_threshold=0.1
         )
-        _DISC_CACHE[key] = discover_batches(log, cfg), cfg
-        # Sessions come and go (tests, bench, driver); drop entries from
-        # dead applications so stale JVM references don't accumulate.
-        for k in [k for k in _DISC_CACHE if k[0] != key[0]]:
-            del _DISC_CACHE[k]
-    return _DISC_CACHE[key]
+        return discover_batches(log, cfg), cfg
+
+    return _DISC_CACHE.get(spark, (sf_dir, checkpoints), build)
 
 
 @query(
@@ -854,20 +852,14 @@ FEATURES_SQL = f"""
 # through a deferred localCheckpoint — the same sharing the _DISC_CACHE
 # gives the discovery frame. The frame is (instances × instants) rows —
 # far smaller than the event log.
-_FEAT_CACHE: dict[tuple[str, str], DataFrame] = {}
+_FEAT_CACHE = SessionCache()
 
 
 def _features(spark: SparkSession, sf_dir: str):
     disc, cfg = _discovered(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _FEAT_CACHE:
-        from ..operators.checkpoints import checkpoint_tracked
-
-        feat, _ = checkpoint_tracked(features_table(disc, cfg), eager=False)
-        _FEAT_CACHE[key] = feat
-        for k in [k for k in _FEAT_CACHE if k[0] != key[0]]:
-            del _FEAT_CACHE[k]
-    return _FEAT_CACHE[key], cfg
+    feat = _FEAT_CACHE.get(
+        spark, (sf_dir,), lambda: data_barrier(features_table(disc, cfg)))
+    return feat, cfg
 
 
 @query(
@@ -1170,10 +1162,7 @@ def q28_prioritization_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..preprocessing import find_prioritization_pairs
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _Q28_CACHE:
-        from ..operators.checkpoints import checkpoint_tracked
-
+    def build():
         H = 3_600_000_000
         us = F.unix_micros(F.col(IDS.start_time))
         log = (
@@ -1187,12 +1176,11 @@ def q28_prioritization_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn(IDS.start_time, F.timestamp_micros(F.col("_s_us")))
             .drop("_s_us")
         )
-        log = add_enabled_times(log, IDS, concurrency_threshold=0.1)
-        log, _ = checkpoint_tracked(log, eager=False)
-        _Q28_CACHE[key] = log
-        for k in [k for k in _Q28_CACHE if k[0] != key[0]]:
-            del _Q28_CACHE[k]
-    return find_prioritization_pairs(_Q28_CACHE[key], IDS, activity=None)
+        return data_barrier(
+            add_enabled_times(log, IDS, concurrency_threshold=0.1))
+
+    log = _Q28_CACHE.get(spark, (sf_dir,), build)
+    return find_prioritization_pairs(log, IDS, activity=None)
 
 
 @query(

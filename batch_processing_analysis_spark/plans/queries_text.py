@@ -35,6 +35,7 @@ from ..functions import web as WEB
 from ..pipeline import prepare_web_corpus
 from ..sources.tables import load_table
 from .registry import query
+from .session_cache import SessionCache
 
 # ---------------------------------------------------------------------------
 # Shared oracle fragments
@@ -353,25 +354,23 @@ def q52_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # free, block-cached) so both queries — and any facade — share one run
 # instead of each re-propagating (the _DISC_CACHE precedent,
 # plans/queries_eventlog.py).
-_CC_CACHE: dict[tuple[str, str], DataFrame] = {}
+_CC_CACHE = SessionCache()
 
 
 def _doc_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CC_CACHE:
+    def build():
         docs = _docs(spark, sf_dir)
         edges = D.exact_pair_edges(docs).unionByName(
             D.ngram_jaccard_pairs(docs, n=5, df_max=10, threshold=0.5)
             .select("id_a", "id_b")
         )
         cc = G.connected_components(docs.select("doc_id"), edges)
-        _CC_CACHE[key] = cc.localCheckpoint(eager=True)
-        for k in [k for k in _CC_CACHE if k[0] != key[0]]:
-            del _CC_CACHE[k]
-    return _CC_CACHE[key]
+        return cc.localCheckpoint(eager=True)
+
+    return _CC_CACHE.get(spark, (sf_dir,), build)
 
 
-_NB_CACHE: dict[tuple[str, str], DataFrame] = {}
+_NB_CACHE = SessionCache()
 
 
 def _nb_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -380,14 +379,8 @@ def _nb_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     consume the same scoring pipeline; stage it once per
     (application, sf_dir), the _doc_components / features-table
     precedent."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _NB_CACHE:
-        _NB_CACHE[key] = TA.nb_class_scores(
-            _docs(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-        for k in [k for k in _NB_CACHE if k[0] != key[0]]:
-            del _NB_CACHE[k]
-    return _NB_CACHE[key]
+    return _NB_CACHE.get(spark, (sf_dir,), lambda: TA.nb_class_scores(
+        _docs(spark, sf_dir)).localCheckpoint(eager=True))
 
 
 # ---------------------------------------------------------------------------
