@@ -130,7 +130,7 @@ class Configuration:
     # With workload_bucket_seconds=None, features_table AUTO-switches to
     # the bucketed join (width = workload_auto_bucket_seconds) when the
     # estimated instant count — #instances × (1 + ready + enabled
-    # negatives), one cheap count over the checkpointed discovery frame
+    # negatives), the count that materializes the staged instance frame
     # — exceeds this budget. ~500k (resource, epoch) rows ≈ tens of MB
     # broadcast: the sane ceiling for shipping the point set to every
     # executor. None disables the probe (always broadcast).

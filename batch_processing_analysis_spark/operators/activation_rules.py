@@ -32,7 +32,7 @@ from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from ..config import ActivationRulesMode, Configuration
-from .checkpoints import hold
+from .checkpoints import data_barrier, hold
 from .range_join import workload_at_instants
 
 OUTCOME_ACTIVATE = 1
@@ -77,25 +77,37 @@ def _per_case(log: DataFrame, config: Configuration) -> DataFrame:
 
 
 def features_table(log: DataFrame, config: Configuration) -> DataFrame:
-    """The features table (activation_rules.py:33-150) as one lazy plan.
+    """The features table (activation_rules.py:33-150); each part of the
+    plan runs once.
 
     Durations are emitted in SECONDS (double) and the instant as epoch
     seconds, matching the reference's final parsed table
     (activation_rules.py:159-164). day_of_week is Monday=0 (F3 shift).
 
-    ``cases``/``inst`` are LAZY localCheckpoints: each is referenced by
-    four plan branches below (instants, subset, flow, final join), and
-    without materialization every branch re-runs the per-case windows
-    over the discovery output (the q43 lesson; lazy, so plan building
-    stays execution-free and the blocks are ContextCleaner-reclaimed, or
-    freed by release_analysis when ``log`` is an analyze_batches result).
-    Modest at sf0.1 (the upstream discovery frame is already
-    checkpointed, so each branch recompute was one window pass) but it
-    bounds the fan-out cost at corpus scale, where four re-runs of the
-    per-case aggregation are four shuffles.
+    ``cases`` (per-case rows, each with its case's first start over the
+    full log) and ``inst`` (per-instance rows) are lazy localCheckpoints
+    read by the instants, the subset aggregate and the workload points,
+    so the per-case aggregation over ``log`` runs once. All subset
+    features — queue size, first/last enablement, firing activity, flow
+    start — come from ONE ``instants ⋈ cases`` join + groupBy, and the
+    points from ``instants ⋈ inst``. The result is a lazy
+    :func:`data_barrier`: the caller's first action stages it and later
+    ones (``render_activation_rules`` runs two) read the staged rows.
+    All three stagings are :func:`hold`-ed on ``log``, so
+    ``release_analysis`` frees them when ``log`` is an
+    ``analyze_batches`` result; otherwise the ContextCleaner reclaims
+    them.
     """
     ids = config.log_ids
-    cases = hold(log, _per_case(log, config).localCheckpoint(eager=False))
+    # t_max_flow input (J6): each case's first start over the FULL log,
+    # batched or not. Subsets grow monotonically with the instant and
+    # always hold the earliest-enabled case, so the feature is the min
+    # of this column over the subset's cases.
+    case_first_start = log.groupBy(ids.case).agg(
+        F.min(F.unix_micros(F.col(ids.start_time))).alias("_log_first_start")
+    )
+    cases = hold(log, _per_case(log, config).join(case_first_start, ids.case, "left")
+                 .localCheckpoint(eager=False))
 
     inst = cases.groupBy(ids.batch_id).agg(
         F.first(ids.batch_type).alias(ids.batch_type),
@@ -157,9 +169,15 @@ def features_table(log: DataFrame, config: Configuration) -> DataFrame:
     instants = pos.unionByName(neg_ready).unionByName(neg_enabled)
 
     # --- subset aggregates: cases enabled at or before each instant --------
-    subset = (
-        instants.join(cases.select(ids.batch_id, ids.case, "case_start",
-                                   "case_enabled", "case_first_activity"), ids.batch_id)
+    # Coinciding instants of one outcome (a ready negative equal to a
+    # sampled enablement) collapse into one group, which then sees each
+    # case once per copy: hence a distinct count. A null case id never
+    # matches a first start (equi-join), so a subset of null ids only has
+    # no flow start; num_queue > 0 drops it, as an inner join would.
+    feat = (
+        instants.join(cases.select(ids.batch_id, ids.case, "case_start", "case_enabled",
+                                   "case_first_activity", "_log_first_start"),
+                      ids.batch_id)
         .filter(F.col("case_enabled") <= F.col("instant"))
         .groupBy(ids.batch_id, "instant", "outcome")
         .agg(
@@ -167,45 +185,31 @@ def features_table(log: DataFrame, config: Configuration) -> DataFrame:
             F.max("case_enabled").alias("last_enabled"),
             F.min("case_enabled").alias("first_enabled"),
             F.min(F.struct("case_start", "case_enabled", "case_first_activity")).alias("_first"),
+            F.min("_log_first_start").alias("_min_flow_start"),
         )
-    )
-
-    # t_max_flow: min first-start over the FULL log among the subset's
-    # cases (J6). The subset always contains the earliest-enabled case,
-    # and case subsets grow monotonically with the instant, so the min is
-    # over the instance's cases enabled <= instant.
-    case_first_start = log.groupBy(ids.case).agg(
-        F.min(F.unix_micros(F.col(ids.start_time))).alias("_log_first_start")
-    )
-    flow = (
-        instants.join(cases.select(ids.batch_id, ids.case, "case_enabled"), ids.batch_id)
-        .filter(F.col("case_enabled") <= F.col("instant"))
-        .join(case_first_start, ids.case)
-        .groupBy(ids.batch_id, "instant", "outcome")
-        .agg(F.min("_log_first_start").alias("_min_flow_start"))
-    )
-
-    feat = (
-        subset.join(flow, [ids.batch_id, "instant", "outcome"])
+        .filter(F.col("num_queue") > 0)
         .join(inst.select(ids.batch_id, ids.batch_type, ids.resource, "activities"),
               ids.batch_id)
     )
 
     # --- workload: J2 range join over distinct (resource, instant) ---------
+    # Points come from instants ⋈ inst, not from ``feat``, so the subset
+    # subtree enters the plan once. A point whose instant has no subset
+    # row (no case enabled by then) only adds a workload row that the
+    # left join below never matches.
     # Strategy: an explicit config.workload_bucket_seconds wins; with
-    # None, a cheap probe (one count-distinct over the checkpointed
-    # discovery frame — NOT the feature plan) estimates the instant set
-    # as #instances × (1 + ready + enabled negatives) and switches to
-    # the bucketed equi-join when it exceeds the broadcast budget.
-    points = feat.select(ids.resource, "instant").distinct()
+    # None, the instance count of the staged ``inst`` (this count is the
+    # action that materializes it) estimates the instant set as
+    # #instances × (1 + ready + enabled negatives) and switches to the
+    # bucketed equi-join when it exceeds the broadcast budget.
+    points = (
+        instants.join(inst.select(ids.batch_id, ids.resource), ids.batch_id)
+        .select(ids.resource, "instant").distinct()
+    )
     if config.workload_bucket_seconds:
         bucket_us = config.workload_bucket_seconds * 1_000_000
     elif config.workload_auto_bucket_threshold is not None:
-        n_inst = (
-            log.filter(F.col(ids.batch_id).isNotNull())
-            .select(ids.batch_id).distinct().count()
-        )
-        est_instants = n_inst * (1 + n_ready + k)
+        est_instants = inst.count() * (1 + n_ready + k)
         bucket_us = (
             config.workload_auto_bucket_seconds * 1_000_000
             if est_instants > config.workload_auto_bucket_threshold
@@ -232,7 +236,7 @@ def features_table(log: DataFrame, config: Configuration) -> DataFrame:
 
     ts = F.timestamp_micros(F.col("instant"))
     us = 1_000_000.0
-    return feat.select(
+    return hold(log, data_barrier(feat.select(
         ids.batch_id,
         ids.batch_type,
         "activities",
@@ -248,7 +252,7 @@ def features_table(log: DataFrame, config: Configuration) -> DataFrame:
         F.minute(ts).alias("minute"),
         F.coalesce("workload", F.lit(0)).alias("workload"),
         "outcome",
-    )
+    )))
 
 
 # --------------------------------------------------------------------------

@@ -848,17 +848,16 @@ FEATURES_SQL = f"""
 
 # Shared features table (q36 projection + q37 mining + repeated bench
 # iterations): the instants/workload pipeline above it costs ~5 s at
-# sf0.1 per build, so it is staged once per (applicationId, sf_dir)
-# through a deferred localCheckpoint — the same sharing the _DISC_CACHE
-# gives the discovery frame. The frame is (instances × instants) rows —
-# far smaller than the event log.
+# sf0.1 per build, so the frame is built once per (applicationId,
+# sf_dir) — the same sharing the _DISC_CACHE gives the discovery frame.
+# features_table already returns a staged (deferred-checkpoint) frame of
+# (instances × instants) rows, far smaller than the event log.
 _FEAT_CACHE = SessionCache()
 
 
 def _features(spark: SparkSession, sf_dir: str):
     disc, cfg = _discovered(spark, sf_dir)
-    feat = _FEAT_CACHE.get(
-        spark, (sf_dir,), lambda: data_barrier(features_table(disc, cfg)))
+    feat = _FEAT_CACHE.get(spark, (sf_dir,), lambda: features_table(disc, cfg))
     return feat, cfg
 
 

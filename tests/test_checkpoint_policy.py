@@ -24,7 +24,8 @@ def reliable_env(tmp_path, monkeypatch):
     yield tmp_path / "ckpt"
 
 
-def test_local_default_is_local_checkpoint(spark):
+def test_local_default_is_local_checkpoint(spark, monkeypatch):
+    monkeypatch.delenv(C._MODE_ENV, raising=False)
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet().toArray())
     df = C.data_barrier(spark.range(100).withColumn("x", F.col("id") * 2),

@@ -81,7 +81,8 @@ def _full_analysis(log):
     return result, owned
 
 
-def test_release_analysis_frees_blocks(spark):
+def test_release_analysis_frees_blocks(spark, monkeypatch):
+    monkeypatch.delenv(C._MODE_ENV, raising=False)  # local blocks
     log = injected_log_df(spark, inject_batches(n_batches=3, batch_size=4))
 
     # Set-based, not count-based: the ContextCleaner reclaims OTHER
